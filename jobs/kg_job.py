@@ -30,7 +30,8 @@ def main() -> None:
     ap.add_argument("--input", required=True)
     ap.add_argument("--workdir", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--strategy", default="fused")
+    ap.add_argument("--strategy", default="fused",
+                    choices=("fused", "relational"))
     ap.add_argument("--model", default="repos")
     ap.add_argument("--run-id", default="run0")
     ap.add_argument("--context-window", type=int, default=0,

@@ -138,7 +138,8 @@ def main() -> None:
     ap.add_argument("--format", default="text",
                     choices=["text", "json", "parquet"])
     ap.add_argument("--model", default="repos")
-    ap.add_argument("--strategy", default="fused")
+    ap.add_argument("--strategy", default="fused",
+                    choices=("fused", "relational"))
     ap.add_argument("--graph", default=None,
                     help="kg_job output dir; links predictions against "
                          "the persisted nodes table")

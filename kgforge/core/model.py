@@ -74,8 +74,9 @@ class SurrogateModel:
     max_gap: int = field(init=False)
     max_term_len: int = field(init=False)
     first_tokens: frozenset = field(init=False, repr=False)
-    # subword-encoded gazetteer (gaz_sub dict, first-symbol probe set,
-    # max encoded length) — built only in bpe mode
+    # subword-encoded gazetteer (gaz_sub dict keyed by (symbol,
+    # starts_word) pairs, first-symbol probe set, max encoded length) —
+    # built only in bpe mode
     gaz_sub: tuple = field(init=False, repr=False)
 
     def __post_init__(self):
@@ -87,15 +88,20 @@ class SurrogateModel:
         if self.tokenizer == "bpe":
             from .surrogate import bpe_encode_word
 
+            # each symbol carries its word-start flag, so a key fixes the
+            # term's word segmentation: ("ab","c") and ("a","bc") encode to
+            # distinct keys, and no key matches across a word boundary the
+            # term does not have
             enc: dict[tuple, int] = {}
             for term, t in self.gaz.items():
-                syms: list[str] = []
+                key: list[tuple[str, bool]] = []
                 for w in term:
-                    syms.extend(bpe_encode_word(w, self.bpe_merges))
-                enc[tuple(syms)] = t
+                    syms = bpe_encode_word(w, self.bpe_merges)
+                    key.extend((s, j == 0) for j, s in enumerate(syms))
+                enc[tuple(key)] = t
             self.gaz_sub = (
                 enc,
-                frozenset(k[0] for k in enc),
+                frozenset(k[0][0] for k in enc),
                 max(len(k) for k in enc),
             )
         else:

@@ -65,8 +65,10 @@ def detect_mentions_bpe(tokens: list[str], model: SurrogateModel) -> list[Mentio
          per-word, so subword units never cross word boundaries;
       2. greedy longest-match the subword stream against the gazetteer
          ENCODED WITH THE SAME MERGES (model.gaz_sub), anchored at word
-         starts and required to end at word ends — BPE is lossless per
-         word, so a subword match is exactly a word-level match;
+         starts and required to end at word ends; keys pair each symbol
+         with its word-start flag, so the match's word segmentation must
+         equal the term's — BPE is lossless per word, so a subword match
+         is exactly a word-level match;
       3. BIO round-trip at the subword grain (encode_bio/decode_bio —
          the reference's tag transitions exercised on subword ids);
       4. map spans back to WORD indices via the alignment, so every
@@ -87,6 +89,7 @@ def detect_mentions_bpe(tokens: list[str], model: SurrogateModel) -> list[Mentio
             word_of.append(wi)
             word_start.append(j == 0)
     gaz_sub, first_sub, max_sub = model.gaz_sub
+    flagged = list(zip(subtoks, word_start))
     n = len(subtoks)
     ments_sub: list[Mention] = []
     i = 0
@@ -101,7 +104,7 @@ def detect_mentions_bpe(tokens: list[str], model: SurrogateModel) -> list[Mentio
             # explicitly rather than rely on injectivity
             if e < n and word_of[e] == word_of[e - 1]:
                 continue
-            t = gaz_sub.get(tuple(subtoks[i:e]))
+            t = gaz_sub.get(tuple(flagged[i:e]))
             if t is not None:
                 ments_sub.append((i, e, t))
                 i = e
@@ -293,19 +296,12 @@ def classify_relation(
     return 0, 0.9
 
 
-def extract_triples_spanned(
-    tokens: list[str], model: SurrogateModel
-) -> list[tuple[int, int, int, int, int, int, int, float]]:
-    """Per-unit cascade keeping SPAN keys:
-    ``[(ss, se, os, oe, rel_id, sub_type, obj_type, score)]``.
-
-    The text-key dedup of ``extract_triples`` collapses distinct span pairs
-    with equal surfaces; strict evaluation (reference
-    data/data_structures.py:404-441 — relation matched AND both argument
-    spans predicted) needs the span identity, so dedup here is on the span
-    key."""
-    mentions = detect_mentions(tokens, model)
-    out: dict[tuple[int, int, int, int, int, int, int], float] = {}
+def _classified(
+    tokens: list[str], mentions: list[Mention], model: SurrogateModel
+):
+    """M3 -> M4 over one unit: yield ``(sub, obj, rel_id, score)`` for every
+    ranked pair the classifier keeps (NA-dropped, reference
+    theta.py:528-536), in the order the dedup consumers see it."""
     for sub, obj, _s in _ranked_for_extract(tokens, mentions, model):
         if _s < 0.6:
             # noise-band pair: score_pair gives >= 0.6 exactly when the
@@ -314,35 +310,54 @@ def extract_triples_spanned(
             # guaranteed NA-drop
             continue
         rel_plus1, score = classify_relation(tokens, sub, obj, model)
-        if rel_plus1 == 0:
-            continue
-        key = (sub[0], sub[1], obj[0], obj[1], rel_plus1 - 1, sub[2], obj[2])
-        if key not in out:
-            out[key] = score
+        if rel_plus1 != 0:
+            yield sub, obj, rel_plus1 - 1, score
+
+
+def extract_triples_spanned(
+    tokens: list[str],
+    model: SurrogateModel,
+    mentions: list[Mention] | None = None,
+) -> list[tuple[int, int, int, int, int, int, int, float]]:
+    """Per-unit cascade keeping SPAN keys:
+    ``[(ss, se, os, oe, rel_id, sub_type, obj_type, score)]``.
+
+    The text-key dedup of ``extract_triples`` collapses distinct span pairs
+    with equal surfaces; strict evaluation (reference
+    data/data_structures.py:404-441 — relation matched AND both argument
+    spans predicted) needs the span identity, so dedup here is on the span
+    key.  ``mentions`` as in extract_triples."""
+    if mentions is None:
+        mentions = detect_mentions(tokens, model)
+    out: dict[tuple[int, int, int, int, int, int, int], float] = {}
+    for sub, obj, rel, score in _classified(tokens, mentions, model):
+        out.setdefault((sub[0], sub[1], obj[0], obj[1], rel, sub[2], obj[2]), score)
     return [(*k, v) for k, v in sorted(out.items())]
 
 
 def extract_triples(
-    tokens: list[str], model: SurrogateModel
+    tokens: list[str],
+    model: SurrogateModel,
+    mentions: list[Mention] | None = None,
 ) -> list[tuple[str, str, int, int, int, float]]:
-    """Full per-unit cascade -> deduped text triples.
+    """Full per-unit cascade -> deduped text triples — the ONE M3 -> M4 ->
+    dedup loop every extraction path runs.
 
     Returns ``[(sub_text, obj_text, rel_type_id, sub_type, obj_type, score)]``
     — the reference's emitted 5-tuple (models/theta.py:535) plus score,
-    set-deduped per unit (theta.py:536).
+    set-deduped per unit (theta.py:536).  ``mentions`` defaults to
+    ``detect_mentions(tokens, model)``; callers that tag elsewhere (the
+    context window's in-unit filter, cross-NER merges, gold mentions)
+    inject their own span list, in ``tokens``' index space.
     """
-    mentions = detect_mentions(tokens, model)
+    if mentions is None:
+        mentions = detect_mentions(tokens, model)
     out: dict[tuple[str, str, int, int, int], float] = {}
-    for sub, obj, _s in _ranked_for_extract(tokens, mentions, model):
-        if _s < 0.6:
-            # noise-band pair == guaranteed NA (see extract_triples_spanned)
-            continue
-        rel_plus1, score = classify_relation(tokens, sub, obj, model)
-        if rel_plus1 == 0:
-            continue
-        sub_text = " ".join(tokens[sub[0] : sub[1]])
-        obj_text = " ".join(tokens[obj[0] : obj[1]])
-        key = (sub_text, obj_text, rel_plus1 - 1, sub[2], obj[2])
-        if key not in out:
-            out[key] = score
-    return [(k[0], k[1], k[2], k[3], k[4], v) for k, v in sorted(out.items())]
+    for sub, obj, rel, score in _classified(tokens, mentions, model):
+        key = (
+            " ".join(tokens[sub[0] : sub[1]]),
+            " ".join(tokens[obj[0] : obj[1]]),
+            rel, sub[2], obj[2],
+        )
+        out.setdefault(key, score)
+    return [(*k, v) for k, v in sorted(out.items())]

@@ -130,13 +130,14 @@ def _predict_eval_rows(units: DataFrame, model_name: str) -> DataFrame:
             rows = []
             for r in pdf.itertuples(index=False):
                 toks = tokenize(r.text or "")
-                for st, en, t in detect_mentions(toks, model):
+                mentions = detect_mentions(toks, model)
+                for st, en, t in mentions:
                     rows.append(
                         (r.path, r.unit_id, "ner", st, en, ENT_TYPES[t],
                          None, None, None, None, None, None, None, None, None)
                     )
                 for ss, se, os_, oe, rel, st_, ot in [
-                    x[:7] for x in extract_triples_spanned(toks, model)
+                    x[:7] for x in extract_triples_spanned(toks, model, mentions)
                 ]:
                     rows.append(
                         (
@@ -237,7 +238,7 @@ def _with_gold_mentions_triples(
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .core.model import get_model
-        from .core.surrogate import classify_relation, rank_pairs, tokenize
+        from .core.surrogate import extract_triples, tokenize
 
         model = get_model(model_name)
         for pdf in batches:
@@ -248,20 +249,13 @@ def _with_gold_mentions_triples(
                     (m["start"], m["end"], ENT_TYPES.index(m["ent_type"]))
                     for m in r.gold_mentions
                 )
-                seen = set()
-                for sub, obj, _s in rank_pairs(toks, mentions, model):
-                    rel_plus1, _ = classify_relation(toks, sub, obj, model)
-                    if rel_plus1 == 0:
-                        continue
-                    key = (
-                        " ".join(toks[sub[0] : sub[1]]),
-                        " ".join(toks[obj[0] : obj[1]]),
-                        REL_TYPES[rel_plus1 - 1],
-                    )
-                    if key in seen:
-                        continue
-                    seen.add(key)
-                    rows.append((r.path, r.unit_id, key[0], key[1], key[2]))
+                # the slice keys on (subj, obj, pred): set-dedup the
+                # cascade's typed triples down to that key
+                triples = extract_triples(toks, model, mentions)
+                for subj, obj, pred in dict.fromkeys(
+                    (t[0], t[1], REL_TYPES[t[2]]) for t in triples
+                ):
+                    rows.append((r.path, r.unit_id, subj, obj, pred))
             yield pd.DataFrame(
                 rows, columns=["doc_key", "sent_ix", "subj", "obj", "pred"]
             )

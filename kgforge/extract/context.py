@@ -9,9 +9,9 @@ Reference behavior this realizes:
   (``sent_start`` offset bookkeeping).  Here: ``with_context(units, k)``
   builds the widened text with a ±k neighbor-sentence window
   (``collect_list(text) over rowsBetween(-k, k)``) plus the token offset
-  of the unit's own text, and ``extract_triples_fused_ctx`` runs the
-  cascade over the widened tokens, keeping only triples whose mention
-  spans fall inside the unit, re-based to sentence-local positions.
+  of the unit's own text, and ``rel.extract_triples_fused(units, k=k)``
+  runs the cascade over the widened tokens with the mentions inside the
+  unit (``window_mentions``), so emitted surfaces stay sentence-local.
 
 * ``use_cross_ner`` (reference data/utils.py:165-191 +
   find_subarray_position:395-407): mention SURFACES found in one sentence
@@ -37,8 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..core.vocab import ENT_TYPES, REL_TYPES
-from .rel import TRIPLES_SCHEMA
+from ..core.surrogate import Mention, detect_mentions, tokenize
+from .rel import _triples_pass
 
 
 def with_context(units: DataFrame, k: int) -> DataFrame:
@@ -72,65 +72,16 @@ def with_context(units: DataFrame, k: int) -> DataFrame:
     )
 
 
-def extract_triples_fused_ctx(
-    units: DataFrame, model_name: str = "repos", k: int = 1
-) -> DataFrame:
-    """Scale path with context: ONE Arrow pass over context-widened units.
-
-    Tagging (M1/M2) runs over the WIDENED token sequence — the model 'sees'
-    neighbor context, and a lexicon term straddling a sentence boundary
-    changes greedy matching exactly as the reference's widened encoding
-    does (data/utils.py:84-116).  Candidate pairs, however, come only from
-    mentions inside the unit's own token range [n_left, n_left + n_own) —
-    the reference enumerates relation candidates within sent_start/sent_end
-    only.  Emitted spans are unit-local."""
-    ctx = with_context(units, k)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..core.model import get_model
-        from ..core.surrogate import (
-            classify_relation,
-            detect_mentions,
-            rank_pairs,
-            tokenize,
-        )
-
-        model = get_model(model_name)
-        cols = [f.name for f in TRIPLES_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                toks = tokenize(r.ctx_text or "")
-                off = int(r.n_left)
-                hi = off + len(tokenize(r.text or ""))
-                in_unit = [
-                    m for m in detect_mentions(toks, model)
-                    if off <= m[0] and m[1] <= hi
-                ]
-                seen = set()
-                for sub, obj, _s in rank_pairs(toks, in_unit, model):
-                    rel_plus1, score = classify_relation(toks, sub, obj, model)
-                    if rel_plus1 == 0:
-                        continue
-                    key = (
-                        " ".join(toks[sub[0] : sub[1]]),
-                        " ".join(toks[obj[0] : obj[1]]),
-                        rel_plus1 - 1, sub[2], obj[2],
-                    )
-                    if key in seen:
-                        continue
-                    seen.add(key)
-                    rows.append(
-                        (
-                            r.repo, r.path, r.commit, r.unit_id,
-                            key[0], REL_TYPES[key[2]], key[1],
-                            ENT_TYPES[key[3]], ENT_TYPES[key[4]],
-                            score, r.content_sha,
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return ctx.mapInPandas(gen, TRIPLES_SCHEMA)
+def window_mentions(r, model) -> tuple[list[str], int, list[Mention]]:
+    """Tag one ``with_context`` row over its WIDENED tokens (the model
+    'sees' neighbor context) and keep the mentions inside the unit's own
+    token range [n_left, n_left + n_own).  Returns (widened tokens,
+    n_left, in-unit mentions in widened-token space)."""
+    toks = tokenize(r.ctx_text or "")
+    lo = int(r.n_left)
+    hi = lo + len(tokenize(r.text or ""))
+    ments = [m for m in detect_mentions(toks, model) if lo <= m[0] and m[1] <= hi]
+    return toks, lo, ments
 
 
 def mentions_ctx(
@@ -138,9 +89,9 @@ def mentions_ctx(
     ctx: DataFrame | None = None,
 ) -> DataFrame:
     """Context-widened TAGGING for the RELATIONAL path: detect mentions
-    over the ±k-widened token sequence (the model 'sees' neighbor context,
-    exactly as in extract_triples_fused_ctx), keep only mentions inside
-    the unit's own token range, re-based to unit-local positions.
+    over the ±k-widened token sequence (window_mentions, exactly as in
+    rel.extract_triples_fused with k > 0), keep only mentions inside the
+    unit's own token range, re-based to unit-local positions.
 
     Output schema == explode_mentions (repo, path, commit, unit_id,
     content_sha, text, m_id, start, end, ent_type) so it composes with
@@ -160,7 +111,6 @@ def mentions_ctx(
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..core.model import get_model
-        from ..core.surrogate import detect_mentions, tokenize
 
         model = get_model(model_name)
         cols = [
@@ -170,20 +120,15 @@ def mentions_ctx(
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                ctoks = tokenize(r.ctx_text or "")
-                off = int(r.n_left)
-                hi = off + len(tokenize(r.text or ""))
-                m_id = 0
-                for s, e, t in detect_mentions(ctoks, model):
-                    if off <= s and e <= hi:
-                        rows.append(
-                            (
-                                r.repo, r.path, r.commit, r.unit_id,
-                                r.content_sha, r.text,
-                                m_id, s - off, e - off, t,
-                            )
+                _toks, off, ments = window_mentions(r, model)
+                for m_id, (s, e, t) in enumerate(ments):
+                    rows.append(
+                        (
+                            r.repo, r.path, r.commit, r.unit_id,
+                            r.content_sha, r.text,
+                            m_id, s - off, e - off, t,
                         )
-                        m_id += 1
+                    )
             yield pd.DataFrame(rows, columns=cols)
 
     return ctx.mapInPandas(gen, schema)
@@ -195,7 +140,8 @@ def classify_mentions_fused(
     """Merged mention rows (explode_mentions schema; ``text`` may be
     context-widened with spans in the same space) -> triples in ONE Arrow
     pass: mentions re-assemble per unit (one shuffle of small mention
-    structs on the unit key), then rank + classify in-process — the same
+    structs on the unit key), then the shared rank + classify + per-unit
+    dedup loop (rel._triples_pass with the mentions injected) — the same
     sentence-local math as pair_relational + classify_pairs (equivalence
     tested) without shuffling n² scored pair rows or re-tokenizing the
     widened text once per pair.  The scale path for the combined
@@ -208,46 +154,15 @@ def classify_mentions_fused(
         F.collect_list(F.struct("start", "end", "ent_type")).alias("ments"),
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..core.model import get_model
-        from ..core.surrogate import classify_relation, rank_pairs, tokenize
+    def units_of(r, model):
+        ments = sorted(
+            (int(m["start"]), int(m["end"]), int(m["ent_type"])) for m in r.ments
+        )
+        yield int(r.unit_id), r.content_sha, tokenize(r.text or ""), ments
 
-        model = get_model(model_name)
-        cols = [f.name for f in TRIPLES_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                toks = tokenize(r.text or "")
-                ments = sorted(
-                    (int(m["start"]), int(m["end"]), int(m["ent_type"]))
-                    for m in r.ments
-                )
-                seen = set()
-                for sub, obj, _s in rank_pairs(toks, ments, model):
-                    rel_plus1, score = classify_relation(toks, sub, obj, model)
-                    if rel_plus1 == 0:
-                        continue
-                    kt = (
-                        " ".join(toks[sub[0] : sub[1]]),
-                        " ".join(toks[obj[0] : obj[1]]),
-                        rel_plus1 - 1, sub[2], obj[2],
-                    )
-                    if kt in seen:
-                        continue
-                    seen.add(kt)
-                    rows.append(
-                        (
-                            r.repo, r.path, r.commit, int(r.unit_id),
-                            kt[0], REL_TYPES[kt[2]], kt[1],
-                            ENT_TYPES[kt[3]], ENT_TYPES[kt[4]],
-                            score, r.content_sha,
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    from .rel import TRIPLE_KEY
-
-    return per_unit.mapInPandas(gen, TRIPLES_SCHEMA).dropDuplicates(TRIPLE_KEY)
+    # one row per unit (the groupBy) + the kernel's per-unit dedup: the
+    # output is already unique on TRIPLE_KEY
+    return _triples_pass(per_unit, model_name, units_of)
 
 
 def rebase_to_ctx(

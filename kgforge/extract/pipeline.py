@@ -23,22 +23,22 @@ def extract_pipeline(
 ) -> DataFrame:
     """repos(repo, path, commit, lang, content) -> triples.
 
-    strategy='fused'      — maximal fusion: one Arrow pass from content to
-                            triples, zero intermediate shuffle or Python
-                            round-trip (the 100 TB plan).
-    strategy='staged'     — unit-extraction UDF then cascade UDF (two
-                            Arrow hops; useful when units feed multiple
-                            consumers, e.g. checkpointing the unit table).
+    strategy='fused'      — the one Arrow kernel (rel._triples_pass):
+                            content -> triples in one pass at k=0
+                            (extract_triples_onepass, the 100 TB plan),
+                            units -> ±k window -> triples at k > 0
+                            (extract_triples_fused).
     strategy='relational' — mentions self-join + broadcast type filter +
                             window top-k + classify UDF (the plan whose
                             stages are individually oracle-checkable).
-    All strategies produce identical triples (tested).
+    'staged' is accepted as a synonym of 'fused'.  Both strategies
+    produce identical triples (tested); any other name raises ValueError.
 
     context_window=k > 0 tags each unit together with its ±k neighbor
     sentences (reference config.yaml:34 context_window, data/utils.py:
-    84-116); without cross_ner it implies the staged fused-ctx path (the
-    window needs the unit table).  k=0 is bit-identical to the plain
-    pipeline (tested).
+    84-116); without cross_ner it runs the fused kernel under either
+    strategy (the window needs the unit table).  k=0 is bit-identical to
+    the plain pipeline (tested).
 
     context_window + cross_ner COMPOSE (reference applies both flags in
     the same sample-construction pass, data/utils.py:84-116 window +
@@ -49,6 +49,10 @@ def extract_pipeline(
     window the tagger saw.  cross_ner with k=0 reproduces the plain
     cross-NER relational output exactly (tested).
     """
+    if strategy == "staged":
+        strategy = "fused"
+    if strategy not in ("fused", "relational"):
+        raise ValueError(f"unknown strategy: {strategy}")
     if cross_ner and strategy != "relational":
         raise ValueError("cross_ner requires strategy='relational' "
                          "(mentions must be materialized to propagate)")
@@ -77,18 +81,10 @@ def extract_pipeline(
         pairs = pair_relational(mentions, model_name)
         return classify_pairs(pairs, model_name)
     if context_window > 0:
-        from .context import extract_triples_fused_ctx
-
-        units = extract_units(repos)
-        return extract_triples_fused_ctx(units, model_name, k=context_window)
+        return extract_triples_fused(
+            extract_units(repos), model_name, k=context_window
+        )
     if strategy == "fused":
         return extract_triples_onepass(repos, model_name)
-    units = extract_units(repos)
-    if strategy == "staged":
-        return extract_triples_fused(units, model_name)
-    if strategy == "relational":
-        tagged = tag_mentions(units, model_name)
-        mentions = explode_mentions(tagged)
-        pairs = pair_relational(mentions, model_name)
-        return classify_pairs(pairs, model_name)
-    raise ValueError(f"unknown strategy: {strategy}")
+    mentions = explode_mentions(tag_mentions(extract_units(repos), model_name))
+    return classify_pairs(pair_relational(mentions, model_name), model_name)

@@ -7,18 +7,23 @@ set-dedup per sentence (theta.py:536).
 Spark realizations:
 
 * ``classify_pairs`` — pandas UDF over the relational pair rows (composes
-  with pairs.pair_relational).
+  with pairs.pair_relational); the oracle-checkable reference plan.
 
-* ``extract_triples_fused`` — the scale path: ONE ``mapInPandas`` over
-  units runs tag -> pair -> classify per Arrow batch (all stages are
-  sentence-local, reference processes per-batch the same way).  Zero
-  shuffle between detection and triples; the only wide op left is the
-  final ``dropDuplicates``.
+* ``_triples_pass`` — the scale path: the ONE ``mapInPandas`` that emits
+  ``TRIPLES_SCHEMA``.  Per Arrow batch it runs the shared per-unit cascade
+  (``core.surrogate.extract_triples``: tag -> pair -> classify -> per-unit
+  set-dedup; all stages are sentence-local, as the reference processes
+  them per batch).  No shuffle between detection and triples and no
+  global dedup: a unit is one row, so the per-unit dedup is the whole
+  contract.  Three entry points feed it: ``extract_triples_onepass``
+  (content), ``extract_triples_fused`` (units, optional ±k context
+  window) and ``context.classify_mentions_fused`` (injected mentions).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -33,6 +38,7 @@ from pyspark.sql.types import (
 
 from ..core.surrogate import classify_relation, extract_triples, tokenize
 from ..core.vocab import ENT_TYPES, REL_TYPES
+from .units import extract_units_text
 
 TRIPLES_SCHEMA = StructType(
     [
@@ -118,30 +124,27 @@ def classify_pairs(pairs: DataFrame, model_name: str = "repos") -> DataFrame:
     return triples.dropDuplicates(TRIPLE_KEY)
 
 
-def extract_triples_onepass(repos: DataFrame, model_name: str = "repos") -> DataFrame:
-    """Maximal fusion: repos(content) -> triples in ONE Arrow pass.
-
-    Unit extraction, tagging, pairing, and classification are all
-    row-local, so a single mapInPandas avoids the JVM<->Python Arrow hop
-    between the unit UDF and the cascade UDF (~4x wall on the 8k-file
-    corpus at local[32]).  sha256 is computed in-UDF (same value as
-    F.sha2, covered by the provenance tests)."""
-    import hashlib
+def _triples_pass(
+    df: DataFrame, model_name: str, units_of: Callable[..., Iterator[tuple]]
+) -> DataFrame:
+    """The one Arrow pass emitting ``TRIPLES_SCHEMA``.  ``units_of(row,
+    model)`` yields ``(unit_id, content_sha, tokens, mentions)`` for every
+    unit an input row carries; ``mentions=None`` lets the cascade tag the
+    tokens itself.  Each unit runs the shared extract_triples loop, whose
+    per-unit set-dedup is the only dedup (a unit never spans rows)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..core.model import get_model
-        from .units import extract_units_text
 
         model = get_model(model_name)
         cols = [f.name for f in TRIPLES_SCHEMA.fields]
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                content = r.content or ""  # null-content rows yield nothing
-                sha = hashlib.sha256(content.encode()).hexdigest()
-                for uid, _kind, text in extract_units_text(content, r.lang or ""):
-                    toks = tokenize(text)
-                    for sub, obj, rel, st, ot, score in extract_triples(toks, model):
+                for uid, sha, toks, ments in units_of(r, model):
+                    for sub, obj, rel, st, ot, score in extract_triples(
+                        toks, model, ments
+                    ):
                         rows.append(
                             (
                                 r.repo, r.path, r.commit, uid,
@@ -152,34 +155,51 @@ def extract_triples_onepass(repos: DataFrame, model_name: str = "repos") -> Data
                         )
             yield pd.DataFrame(rows, columns=cols)
 
-    return repos.mapInPandas(gen, TRIPLES_SCHEMA)
+    return df.mapInPandas(gen, TRIPLES_SCHEMA)
 
 
-def extract_triples_fused(units: DataFrame, model_name: str = "repos") -> DataFrame:
-    """Scale path: units -> triples in one Arrow-batched pass (no shuffle
-    until the final dedup).  Dedup inside the UDF is per-unit (reference
-    set semantics); the global dropDuplicates is a safety net for units
-    split across batches (cannot happen — a unit is one row — so it
-    de-dups nothing but keeps the contract explicit and cheap)."""
+def _content_units(r, model):
+    content = r.content or ""  # null-content rows yield nothing
+    sha = hashlib.sha256(content.encode()).hexdigest()
+    for uid, _kind, text in extract_units_text(content, r.lang or ""):
+        yield uid, sha, tokenize(text), None
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..core.model import get_model
 
-        model = get_model(model_name)
-        cols = [f.name for f in TRIPLES_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                toks = tokenize(r.text or "")
-                for sub, obj, rel, st, ot, score in extract_triples(toks, model):
-                    rows.append(
-                        (
-                            r.repo, r.path, r.commit, r.unit_id,
-                            sub, REL_TYPES[rel], obj,
-                            ENT_TYPES[st], ENT_TYPES[ot],
-                            score, r.content_sha,
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+def _unit_tokens(r, model):
+    yield r.unit_id, r.content_sha, tokenize(r.text or ""), None
 
-    return units.mapInPandas(gen, TRIPLES_SCHEMA)
+
+def extract_triples_onepass(repos: DataFrame, model_name: str = "repos") -> DataFrame:
+    """Maximal fusion: repos(content) -> triples in ONE Arrow pass.
+
+    Unit extraction, tagging, pairing, and classification are all
+    row-local, so a single mapInPandas avoids the JVM<->Python Arrow hop
+    between the unit UDF and the cascade UDF (~4x wall on the 8k-file
+    corpus at local[32]).  sha256 is computed in-UDF (same value as
+    F.sha2, covered by the provenance tests)."""
+    return _triples_pass(repos, model_name, _content_units)
+
+
+def extract_triples_fused(
+    units: DataFrame, model_name: str = "repos", k: int = 0
+) -> DataFrame:
+    """Units -> triples in one Arrow-batched pass, no shuffle.
+
+    ``k`` > 0 widens each unit with its ±k neighbor sentences
+    (``context.with_context``, one shuffle on (repo, path); reference
+    config.yaml:34 context_window, data/utils.py:84-116): tagging (M1/M2)
+    runs over the WIDENED tokens — a lexicon term straddling a sentence
+    boundary changes greedy matching exactly as the reference's widened
+    encoding does — while candidate pairs come only from mentions inside
+    the unit's own token range (the reference enumerates relation
+    candidates within sent_start/sent_end).  Surfaces are unit-local.
+    k=0 ships the units as they are and tokenizes each text once."""
+    if k == 0:
+        return _triples_pass(units, model_name, _unit_tokens)
+    from .context import window_mentions, with_context
+
+    def units_of(r, model):
+        toks, _lo, ments = window_mentions(r, model)
+        yield r.unit_id, r.content_sha, toks, ments
+
+    return _triples_pass(with_context(units, k), model_name, units_of)

@@ -3792,16 +3792,16 @@ def kg_context_units(spark, sf_dir):
     + "SELECT doc_id, subj, pred, obj, subj_type, obj_type FROM triples",
 )
 def kg_context_triples(spark, sf_dir):
-    """The REAL context-window cascade (extract_triples_fused_ctx, k=1):
+    """The REAL context-window cascade (extract_triples_fused, k=1):
     tagging runs over the widened token sequence, candidate pairs come
     from in-unit mentions only, spans re-based to unit-local.  On the
     single-token docs lexicon the widened encoding cannot change in-unit
     tagging, so the output must EXACTLY equal the plain kg_triples oracle
     — which is precisely what pins the sent_start/sent_end offset
     bookkeeping (any off-by-one shifts every span and changes triples)."""
-    from .extract.context import extract_triples_fused_ctx
+    from .extract.rel import extract_triples_fused
 
-    t = extract_triples_fused_ctx(_docs_as_ctx_units(spark, sf_dir), "docs", k=1)
+    t = extract_triples_fused(_docs_as_ctx_units(spark, sf_dir), "docs", k=1)
     return t.select(
         F.col("unit_id").cast("bigint").alias("doc_id"),
         "subj", "pred", "obj", "subj_type", "obj_type",

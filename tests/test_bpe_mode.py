@@ -61,6 +61,25 @@ def test_detect_mentions_bpe_word_space_parity(merges):
             text,
             merges,
         )
+    # word boundaries are part of a term: "ab" must not match the two
+    # words "a b", and the terms "ab c" / "a bc" (same symbols, different
+    # segmentation) must not collide in the subword gazetteer
+    cases = [
+        ({("ab",): 0}, [["a", "b"], ["ab"]]),
+        ({("ab", "c"): 0, ("a", "bc"): 1}, [["ab", "c"], ["a", "bc"]]),
+    ]
+    for gaz, token_lists in cases:
+        ws = SurrogateModel(name="ws", patterns=base.patterns, gaz=gaz)
+        sub = SurrogateModel(
+            name="bpe", patterns=base.patterns, gaz=gaz,
+            tokenizer="bpe", bpe_merges=merges,
+        )
+        for toks in token_lists:
+            assert detect_mentions(toks, sub) == detect_mentions(toks, ws), (
+                gaz,
+                toks,
+                merges,
+            )
 
 
 def test_bpe_model_name_roundtrip_special_chars():

@@ -4,7 +4,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgforge.extract.context import (
-    extract_triples_fused_ctx,
     merge_mentions,
     propagate_mentions,
     with_context,
@@ -25,9 +24,15 @@ def _key(r):
 
 
 def test_k0_equals_plain_pipeline(spark, units):
-    """context_window=0 must be bit-identical to the plain fused cascade."""
+    """context_window=0 must be bit-identical to the plain fused cascade:
+    the identity window's in-unit mentions, fed back through the
+    mention-injected kernel, give exactly the plain triples."""
+    from kgforge.extract.context import classify_mentions_fused, mentions_ctx
+
     plain = sorted(map(_key, extract_triples_fused(units).collect()))
-    ctx0 = sorted(map(_key, extract_triples_fused_ctx(units, k=0).collect()))
+    ctx0 = sorted(
+        map(_key, classify_mentions_fused(mentions_ctx(units, k=0)).collect())
+    )
     assert plain == ctx0 and len(plain) > 0
 
 
@@ -54,7 +59,7 @@ def test_ctx_triples_only_in_unit_spans(spark, units):
     """With k=1 every emitted triple must also be derivable from its own
     unit's mention set on the single-token-free repos lexicon boundary:
     subject/object surfaces must occur inside the unit's own text."""
-    t = extract_triples_fused_ctx(units, k=1).collect()
+    t = extract_triples_fused(units, k=1).collect()
     unit_text = {
         (r.repo, r.path, r.unit_id): r.text for r in units.collect()
     }

@@ -21,14 +21,14 @@ def _dirty_df(spark):
 def test_pipeline_survives_dirty_rows_all_strategies(spark):
     df = _dirty_df(spark)
     results = {}
-    for strategy in ("fused", "staged", "relational"):
+    for strategy in ("fused", "relational"):
         out = extract_pipeline(df, strategy).collect()
         results[strategy] = {
             (r.repo, r.path, r.unit_id, r.subj, r.pred, r.obj) for r in out
         }
         # only a.py carries a planted relation
         assert all(r.path == "a.py" for r in out)
-    assert results["fused"] == results["staged"] == results["relational"]
+    assert results["fused"] == results["relational"]
 
 
 def test_mentions_udf_survives_null_text(spark):

@@ -41,9 +41,15 @@ def test_fused_matches_golden(spark, corpus):
 def test_all_strategies_match(spark, corpus):
     _, repos = corpus
     fused = {KEY(r) for r in extract_pipeline(repos, "fused").collect()}
-    staged = {KEY(r) for r in extract_pipeline(repos, "staged").collect()}
     rel = {KEY(r) for r in extract_pipeline(repos, "relational").collect()}
-    assert fused == staged == rel
+    assert fused == rel
+
+
+@pytest.mark.parametrize("context_window", [0, 1])
+def test_unknown_strategy_raises(spark, corpus, context_window):
+    _, repos = corpus
+    with pytest.raises(ValueError, match="unknown strategy"):
+        extract_pipeline(repos, "fusd", context_window=context_window)
 
 
 def test_partition_invariance(spark, corpus):

@@ -94,3 +94,73 @@ def test_tag_encoding_range():
 
     tags = tag_tokens(toks, DOCS)
     assert all(0 <= t <= 2 * NUM_ENT_TYPES for t in tags)
+
+
+def _reference_triples(toks, mentions, model):
+    """The cascade as the reference writes it (theta.py:528-536): every
+    ranked pair is classified, NA dropped, first score kept per text key."""
+    out = {}
+    for sub, obj, _s in rank_pairs(toks, mentions, model):
+        rel_plus1, score = classify_relation(toks, sub, obj, model)
+        if rel_plus1 == 0:
+            continue
+        key = (
+            " ".join(toks[sub[0] : sub[1]]),
+            " ".join(toks[obj[0] : obj[1]]),
+            rel_plus1 - 1, sub[2], obj[2],
+        )
+        out.setdefault(key, score)
+    return sorted((*k, v) for k, v in out.items())
+
+
+def _fixture_units():
+    from kgforge.extract.units import extract_units_text
+    from kgforge.fixtures import gen_repo_rows
+
+    for r in gen_repo_rows(60):
+        yield [text for _, _, text in extract_units_text(r["content"], r["lang"])]
+
+
+# a file whose pattern pairs are enumerated AFTER noise pairs, so a top-1
+# cut keeps the right pair only if it ranks first (the repos fixtures
+# always enumerate their pattern pair first)
+_PLANTED = [["value table key fast value", "table value the key fast value"]]
+
+
+def _cases():
+    for model in (REPOS, get_model("repos@k=1")):
+        for units in _fixture_units():
+            yield model, units
+    for units in _PLANTED:
+        yield get_model("docs@k=1"), units
+
+
+def test_extract_triples_default_mentions_are_detected():
+    for model, units in _cases():
+        for text in units:
+            t = tokenize(text)
+            assert extract_triples(t, model) == extract_triples(
+                t, model, detect_mentions(t, model)
+            )
+
+
+def test_mention_fed_extract_triples_matches_reference_loop():
+    """Context windows (k in {1, 2}) feed in-unit mentions in widened-token
+    space; with top-k truncating (k=1) the shared loop's pair selection
+    must still equal rank_pairs -> classify_relation."""
+    n_triples = 0
+    for model, units in _cases():
+        for i, text in enumerate(units):
+            for k in (1, 2):
+                left = units[max(0, i - k) : i]
+                ctx = tokenize(" ".join(left + units[i : i + k + 1]))
+                lo = sum(len(tokenize(u)) for u in left)
+                hi = lo + len(tokenize(text))
+                ments = [
+                    m for m in detect_mentions(ctx, model)
+                    if lo <= m[0] and m[1] <= hi
+                ]
+                got = extract_triples(ctx, model, ments)
+                assert got == _reference_triples(ctx, ments, model)
+                n_triples += len(got)
+    assert n_triples > 0
